@@ -983,64 +983,6 @@ _STAR_DIRS = [  # CCW unit directions x1000; 707/1000 ~ cos 45
 ]
 
 
-def polygon_metrics(polys: DataFrame) -> DataFrame:
-    """(gid, n_vertices, area2, cx_micro, cy_micro) per ring: area2 =
-    signed shoelace sum in sq-milli units (positive = CCW), centroid in
-    micro units; NULL centroid for degenerate (zero-area) rings. Pure
-    projection — zero exchanges, arbitrary ring sizes."""
-    n = F.size("xs")
-    x1 = F.element_at("xs", 1)
-    y1 = F.element_at("ys", 1)
-    # cyclic next index (1-based): i in [1, n] -> i % n + 1
-    def _cross(i):
-        nx = i % n + 1
-        return (
-            (F.element_at("xs", i) - x1) * (F.element_at("ys", nx) - y1)
-            - (F.element_at("xs", nx) - x1) * (F.element_at("ys", i) - y1)
-        )
-
-    idx = F.sequence(F.lit(1), n)
-    zero = F.lit(0).cast("bigint")
-    area2 = F.aggregate(idx, zero, lambda a, i: a + _cross(i))
-    cnum_x = F.aggregate(
-        idx, zero,
-        lambda a, i: a
-        + ((F.element_at("xs", i) - x1)
-           + (F.element_at("xs", i % n + 1) - x1)) * _cross(i),
-    )
-    cnum_y = F.aggregate(
-        idx, zero,
-        lambda a, i: a
-        + ((F.element_at("ys", i) - y1)
-           + (F.element_at("ys", i % n + 1) - y1)) * _cross(i),
-    )
-    def _cent(base_milli, cnum):
-        return F.when(
-            F.col("area2") != 0,
-            base_milli * F.lit(1000)
-            + F.round(
-                F.lit(1000.0) * cnum.cast("double")
-                / (F.lit(3.0) * F.col("area2").cast("double")),
-                0,
-            ).cast("bigint"),
-        )
-
-    return (
-        polys.select(
-            "gid", "xs", "ys",
-            n.cast("bigint").alias("n_vertices"),
-            area2.alias("area2"),
-            cnum_x.alias("cnx"),
-            cnum_y.alias("cny"),
-        )
-        .select(
-            "gid", "n_vertices", "area2",
-            _cent(F.element_at("xs", 1), F.col("cnx")).alias("cx_micro"),
-            _cent(F.element_at("ys", 1), F.col("cny")).alias("cy_micro"),
-        )
-    )
-
-
 def _star_ring_exprs(res: int, bbox, dialect: str,
                      radius_scale: int = 1):
     """(gid_sql, xs_sql, ys_sql) building one deterministic 8-vertex CCW
@@ -1670,20 +1612,127 @@ FROM dense d JOIN labels l USING (key)
 GROUP BY l.component_id"""
 
 
+# ------------------------------------------------------- grid cell joins
+# radius_join, map_match and pip_raycast are candidates-then-verify joins
+# over an integer-mm grid: one side is keyed by each row's home cell, the
+# other by every cell it can reach, and the exact test runs in numpy on
+# the two sides' rows of each cell. They share the cell-key expressions
+# below (segment_crossings, which stays JVM-only, does too) and one
+# cogroup kernel, _cell_merge_join.
+
+
+def _home_cell(df: DataFrame, x: str, y: str, c: int) -> DataFrame:
+    """df plus (cx, cy): the size-c grid cell of integer-mm point (x, y)."""
+    return df.select(
+        "*",
+        F.expr(f"{x} div {int(c)}").alias("cx"),
+        F.expr(f"{y} div {int(c)}").alias("cy"),
+    )
+
+
+def _cell_cover(df: DataFrame, x0: str, x1: str, y0: str, y1: str,
+                c: int, pad: int = 0) -> DataFrame:
+    """One row per (row of df, size-c cell) covering the integer-mm box
+    [x0, x1] x [y0, y1] dilated by pad cells, keyed (cx, cy) — a bounded
+    (extent / c + 1 + 2 * pad)^2 explode."""
+    c = int(c)
+    return df.select(
+        "*",
+        F.explode(F.expr(
+            f"sequence({x0} div {c} - {pad}, {x1} div {c} + {pad})"
+        )).alias("cx"),
+    ).select(
+        "*",
+        F.explode(F.expr(
+            f"sequence({y0} div {c} - {pad}, {y1} div {c} + {pad})"
+        )).alias("cy"),
+    )
+
+
+def _cell_merge_join(left: DataFrame, right: DataFrame, block, schema: str,
+                     right_order: tuple = ()) -> DataFrame:
+    """Run block(l, r) on every grid cell both sides hold.
+
+    left and right carry integer cell keys (cx, cy). Cells are hashed into
+    max(4 x defaultParallelism, 16) buckets and each bucket is ONE cogroup
+    call: cogrouping per cell paid ~3 ms of Arrow/pandas machinery per cell
+    (7 s for 2.3k cells at sf0.1) for microseconds of block math. Inside a
+    bucket each side is lexsorted by (cx, cy) — the right side then by
+    right_order, the caller's in-cell tie-break — cut into cell runs, and
+    the two run lists are walked in merge order. block gets each side's run
+    as {column: numpy array} and yields output the same way, {column of
+    `schema`: numpy array}; each bucket returns one frame of the
+    concatenated output, or a typed empty frame."""
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    out_type = StructType.fromDDL(schema)
+    empty = to_arrow_schema(out_type).empty_table().to_pandas()
+    n_buckets = max(
+        4 * left.sparkSession.sparkContext.defaultParallelism, 16
+    )
+    bucket = F.expr(f"pmod(xxhash64(cx, cy), {n_buckets})")
+
+    def runs(pdf, order):
+        o = np.lexsort([pdf[c].to_numpy() for c in (*order[::-1], "cy", "cx")])
+        cols = {c: pdf[c].to_numpy()[o] for c in pdf.columns if c != "bucket"}
+        cx, cy = cols["cx"], cols["cy"]
+        starts = np.flatnonzero(
+            np.r_[True, (cx[1:] != cx[:-1]) | (cy[1:] != cy[:-1])]
+        )
+        return cols, np.r_[starts, len(cx)]
+
+    def kernel(lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
+        if len(lpdf) == 0 or len(rpdf) == 0:
+            return empty
+        lc, lb = runs(lpdf, ())
+        rc, rb = runs(rpdf, right_order)
+        parts = []
+        i = j = 0
+        while i < len(lb) - 1 and j < len(rb) - 1:
+            ci = (lc["cx"][lb[i]], lc["cy"][lb[i]])
+            cj = (rc["cx"][rb[j]], rc["cy"][rb[j]])
+            if ci < cj:
+                i += 1
+            elif cj < ci:
+                j += 1
+            else:
+                parts.extend(block(
+                    {c: a[lb[i]:lb[i + 1]] for c, a in lc.items()},
+                    {c: a[rb[j]:rb[j + 1]] for c, a in rc.items()},
+                ))
+                i += 1
+                j += 1
+        if not parts:
+            return empty
+        return pd.DataFrame({
+            c: np.concatenate([f[c] for f in parts]) for c in empty.columns
+        })
+
+    return (
+        left.withColumn("bucket", bucket).groupBy("bucket")
+        .cogroup(right.withColumn("bucket", bucket).groupBy("bucket"))
+        .applyInPandas(kernel, out_type)
+    )
+
+
 # ------------------------------------------------------- radius self-join
 # Fixed-radius pair search ("all points within R meters of each other") —
 # the distance-band neighbor primitive under density maps, duplicate-site
 # detection, and DBSCAN-style epsilon queries. Scale shape: grid the plane
-# into R-sized cells, explode ONE side into its 3x3 cell neighborhood
-# (bounded x9 blowup), equi-join on the cell key, verify the exact distance
-# — the canonical candidates-then-verify spatial join, never a cartesian
-# product. Each qualifying pair (a < b) is produced exactly once: a's probe
-# set covers b's unique home cell iff the pair is within one cell offset,
-# which an R-sized grid guarantees for any pair within R. The join key's
-# skew is bounded by the densest R-cell; at 100 TB a hot cell would be
-# salted exactly like tile_rollup_salted. All arithmetic is integer
-# millimeters (coordinates are positive UTM meters, so truncating `div`
-# equals DuckDB's floor `//`), so the oracle hash-compares bitwise.
+# into R-sized cells, send each point to its home cell and, as a probe, to
+# its forward half-neighborhood, and verify the exact distance per cell in
+# the grid-join kernel — the canonical candidates-then-verify spatial
+# join, never a cartesian product. Each qualifying pair (a < b) is
+# produced exactly once: a's probe set covers b's unique home cell iff the
+# pair is within one cell offset, which an R-sized grid guarantees for any
+# pair within R. The join key's skew is bounded by the densest R-cell; at
+# 100 TB a hot cell would be salted exactly like tile_rollup_salted. All
+# arithmetic is integer millimeters (coordinates are positive UTM meters,
+# so truncating `div` equals DuckDB's floor `//`), so the oracle
+# hash-compares bitwise.
 RADIUS_M = 500.0
 
 
@@ -1698,18 +1747,13 @@ def radius_join(points: DataFrame, radius_m: float = RADIUS_M) -> DataFrame:
     """(pk_a, pk_b, dist_sq_mm2): unordered point pairs (pk_a < pk_b)
     within radius_m meters, squared distance in exact integer mm^2.
 
-    Round-6 shape: probes explode over the FORWARD half-neighborhood
-    (5 offsets, not 9 — 44% fewer probe rows, cross-cell pairs generated
-    once instead of twice) and the probe x home pair blocks are computed
-    in chunked numpy — the equi-join's full collision volume never
+    Probes explode over the FORWARD half-neighborhood (5 offsets, not 9 —
+    44% fewer probe rows, cross-cell pairs generated once instead of
+    twice) and each probe x home cell block is computed in chunked numpy
+    by the grid-join kernel — the equi-join's full collision volume never
     materializes as rows, and only pairs that pass d2 <= r^2 leave the
-    kernel (canonicalized pk_a < pk_b, deduped for the same-cell double
-    order). Cells are BUCKETED into ~4x-parallelism cogroups (hashed cell
-    key) and matched inside the kernel by a sorted merge walk: per-cell
-    cogrouping paid ~3 ms of Arrow/pandas machinery per cell — 7 s for
-    2.3k cells at sf0.1 — for microseconds of block math; one kernel call
-    per bucket amortizes it while keeping the identical per-cell block
-    arithmetic. Integer mm^2 throughout, identical to the brute-force
+    kernel (canonicalized pk_a < pk_b, the same-cell double order kept
+    once). Integer mm^2 throughout, identical to the brute-force
     oracle's."""
     from ..caching import persist_tracked
 
@@ -1718,15 +1762,11 @@ def radius_join(points: DataFrame, radius_m: float = RADIUS_M) -> DataFrame:
     # without the pin every action recomputes the full upstream (the
     # geocode pipeline at gate scale) twice — guide §5 caching rule
     # (reused + expensive to recompute); ~40 B/point, metadata scale
-    p = persist_tracked(points.select(
+    p = persist_tracked(_home_cell(points.select(
         F.col("primary_key").alias("pk"),
         F.round(F.col("x") * 1000.0, 0).cast("bigint").alias("xi"),
         F.round(F.col("y") * 1000.0, 0).cast("bigint").alias("yi"),
-    ).select(
-        "pk", "xi", "yi",
-        F.expr(f"xi div {r_mm}").alias("cx"),
-        F.expr(f"yi div {r_mm}").alias("cy"),
-    ))
+    ), "xi", "yi", r_mm))
     probes = p.select(
         "pk", "xi", "yi",
         # is_home marks the (0,0) probe: a same-cell pair appears in the
@@ -1751,112 +1791,44 @@ def radius_join(points: DataFrame, radius_m: float = RADIUS_M) -> DataFrame:
     # self-cogroup needs distinct attributes (the _ivf_search discipline)
     home = p.select(
         F.col("pk").alias("h_pk"), F.col("xi").alias("h_xi"),
-        F.col("yi").alias("h_yi"), F.col("cx").alias("h_cx"),
-        F.col("cy").alias("h_cy"),
+        F.col("yi").alias("h_yi"), F.col("cx").alias("cx"),
+        F.col("cy").alias("cy"),
     )
-
-    import pandas as pd
-
     r2 = r_mm * r_mm
-    n_buckets = max(
-        4 * points.sparkSession.sparkContext.defaultParallelism, 16
-    )
-    probes = probes.withColumn(
-        "bucket", F.expr(f"pmod(xxhash64(cx, cy), {n_buckets})")
-    )
-    home = home.withColumn(
-        "bucket", F.expr(f"pmod(xxhash64(h_cx, h_cy), {n_buckets})")
-    )
 
-    def kernel(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
+    def block(l, r):
         import numpy as np
-        import pandas as pd
 
-        empty = pd.DataFrame({
-            "pk_a": pd.Series(dtype=object),
-            "pk_b": pd.Series(dtype=object),
-            "dist_sq_mm2": pd.Series(dtype="int64"),
-        })
-        if len(left) == 0 or len(right) == 0:
-            return empty
-        lcx = left["cx"].to_numpy(np.int64)
-        lcy = left["cy"].to_numpy(np.int64)
-        lo_ord = np.lexsort((lcy, lcx))
-        lcx, lcy = lcx[lo_ord], lcy[lo_ord]
-        pxa = left["xi"].to_numpy(np.int64)[lo_ord]
-        pya = left["yi"].to_numpy(np.int64)[lo_ord]
-        pka = left["pk"].to_numpy(object)[lo_ord]
-        homa = left["is_home"].to_numpy(np.int64)[lo_ord] == 1
-        rcx = right["h_cx"].to_numpy(np.int64)
-        rcy = right["h_cy"].to_numpy(np.int64)
-        ro_ord = np.lexsort((rcy, rcx))
-        rcx, rcy = rcx[ro_ord], rcy[ro_ord]
-        pxb = right["h_xi"].to_numpy(np.int64)[ro_ord]
-        pyb = right["h_yi"].to_numpy(np.int64)[ro_ord]
-        pkb = right["h_pk"].to_numpy(object)[ro_ord]
-        lb = np.flatnonzero(
-            np.r_[True, (lcx[1:] != lcx[:-1]) | (lcy[1:] != lcy[:-1])]
-        )
-        lb = np.r_[lb, len(lcx)]
-        rb = np.flatnonzero(
-            np.r_[True, (rcx[1:] != rcx[:-1]) | (rcy[1:] != rcy[:-1])]
-        )
-        rb = np.r_[rb, len(rcx)]
-        frames = []
-
-        def cell_block(ls, le, rs, re):
-            # identical per-cell block math as the per-cell cogroup ran
-            for s in range(ls, le, 512):
-                e = min(s + 512, le)
-                for t in range(rs, re, 8192):
-                    u = min(t + 8192, re)
-                    ddx = pxa[s:e, None] - pxb[None, t:u]
-                    ddy = pya[s:e, None] - pyb[None, t:u]
-                    d2 = ddx * ddx + ddy * ddy
-                    ii, jj = np.nonzero(d2 <= r2)
-                    if len(ii) == 0:
-                        continue
-                    a = pka[s:e][ii]
-                    b = pkb[t:u][jj]
-                    ah = homa[s:e][ii]
-                    lt = np.less(a, b)
-                    # home probe sees its same-cell partner in both
-                    # orders: keep only its pk < partner half; a
-                    # cross-cell probe's pair exists once — canonicalize
-                    keep = np.where(ah, lt, a != b)
-                    if not keep.any():
-                        continue
-                    aa, bb, ll = a[keep], b[keep], lt[keep]
-                    lo = np.where(ll, aa, bb)
-                    hi = np.where(ll, bb, aa)
-                    frames.append(pd.DataFrame({
-                        "pk_a": lo,
-                        "pk_b": hi,
-                        "dist_sq_mm2": d2[ii, jj][keep].astype(np.int64),
-                    }))
-
-        i = j = 0
-        while i < len(lb) - 1 and j < len(rb) - 1:
-            ci = (lcx[lb[i]], lcy[lb[i]])
-            cj = (rcx[rb[j]], rcy[rb[j]])
-            if ci < cj:
-                i += 1
-            elif cj < ci:
-                j += 1
-            else:
-                cell_block(lb[i], lb[i + 1], rb[j], rb[j + 1])
-                i += 1
-                j += 1
-        return pd.concat(frames, ignore_index=True) if frames else empty
+        for s in range(0, len(l["pk"]), 512):
+            pxa, pya = l["xi"][s:s + 512], l["yi"][s:s + 512]
+            pka, homa = l["pk"][s:s + 512], l["is_home"][s:s + 512] == 1
+            for t in range(0, len(r["h_pk"]), 8192):
+                ddx = pxa[:, None] - r["h_xi"][None, t:t + 8192]
+                ddy = pya[:, None] - r["h_yi"][None, t:t + 8192]
+                d2 = ddx * ddx + ddy * ddy
+                ii, jj = np.nonzero(d2 <= r2)
+                if len(ii) == 0:
+                    continue
+                a = pka[ii]
+                b = r["h_pk"][t:t + 8192][jj]
+                lt = np.less(a, b)
+                # home probe sees its same-cell partner in both orders:
+                # keep only its pk < partner half; a cross-cell probe's
+                # pair exists once — canonicalize
+                keep = np.where(homa[ii], lt, a != b)
+                if not keep.any():
+                    continue
+                aa, bb, ll = a[keep], b[keep], lt[keep]
+                yield {
+                    "pk_a": np.where(ll, aa, bb),
+                    "pk_b": np.where(ll, bb, aa),
+                    "dist_sq_mm2": d2[ii, jj][keep].astype(np.int64),
+                }
 
     id_type = points.schema["primary_key"].dataType.simpleString()
-    return (
-        probes.groupBy("bucket")
-        .cogroup(home.groupBy("bucket"))
-        .applyInPandas(
-            kernel,
-            f"pk_a {id_type}, pk_b {id_type}, dist_sq_mm2 bigint",
-        )
+    return _cell_merge_join(
+        probes, home, block,
+        f"pk_a {id_type}, pk_b {id_type}, dist_sq_mm2 bigint",
     )
 
 
@@ -1989,15 +1961,16 @@ FROM staged)"""
 # within SNAP_RADIUS_M, by exact point-to-segment distance. Scale shape:
 # segments index into R-sized grid cells covering their bounding box
 # dilated by one cell (bounded explode: (len/R + 3)^2 cells per segment);
-# points join on their SINGLE home cell — the small side is exploded, the
-# big side is not. Correctness of the pruning: a segment within R of p has
-# its closest point q on the segment with |p-q| <= R, so q's cell is in
-# the segment's bbox cover and within one cell of p's home cell; the +1
-# dilation therefore guarantees the candidate pair survives. Distance is
-# the piecewise projection formula evaluated on exact integer-mm inputs,
-# with ONE shared SQL string rendered into both engines, so the
-# double-precision ops are bit-identical. Top-1 per point is a window over
-# the unique point key (skew-free).
+# points meet them in the grid-join kernel on their SINGLE home cell — the
+# small side is exploded, the big side is not. Correctness of the pruning:
+# a segment within R of p has its closest point q on the segment with
+# |p-q| <= R, so q's cell is in the segment's bbox cover and within one
+# cell of p's home cell; the +1 dilation therefore guarantees the
+# candidate pair survives. Distance is the piecewise projection formula
+# evaluated on exact integer-mm inputs; the twin renders it from ONE SQL
+# string (seg_dist2_sql) and the kernel repeats its ops term for term, so
+# the double-precision results are bit-identical. Top-1 per point closes
+# inside its home cell, so no exchange by point key follows.
 SNAP_RADIUS_M = 1000.0
 
 
@@ -2031,264 +2004,100 @@ def seg_dist2_sql(px: str, py: str, ax: str, ay: str,
     )
 
 
-def _map_match_cell_kernel(points: DataFrame, pts: DataFrame,
-                           segs: DataFrame, r_mm: int) -> DataFrame:
-    """Per-cell top-1 snap: cogroup (points by home cell) with (segment
-    cell cover), compute the exact d2 CASE in chunked numpy, emit each
-    point's (d2 asc, cand_id asc) winner directly. Arithmetic is
-    term-for-term the staged-CASE plan's: int64 dx/dot/pa2/pb2 products
-    (span-bounded, same overflow envelope as the bigint staging), the
-    interior projection in double, floor(sqrt) for the distance — every
-    comparison bit-identical to the oracle's.
-
-    Cells are bucketed into ~4x-parallelism cogroups (hashed cell key,
-    the radius_join discipline) and matched inside the kernel by a
-    sorted merge walk: per-cell cogrouping paid ~3 ms of Arrow/pandas
-    machinery per cell for microseconds of block math."""
-    import pandas as pd
-
-    id_type = points.schema["primary_key"].dataType.simpleString()
-    out_schema = f"primary_key {id_type}, cand_id bigint, dist_mm bigint"
-    r2 = float(r_mm) * float(r_mm)
-    n_buckets = max(
-        4 * points.sparkSession.sparkContext.defaultParallelism, 16
-    )
-    pts = pts.withColumn(
-        "bucket", F.expr(f"pmod(xxhash64(cx, cy), {n_buckets})")
-    )
-    segs = segs.withColumn(
-        "bucket", F.expr(f"pmod(xxhash64(cx, cy), {n_buckets})")
-    )
-
-    def kernel(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
-        import pandas as pd
-
-        empty = pd.DataFrame({
-            "primary_key": pd.Series(dtype=object),
-            "cand_id": pd.Series(dtype="int64"),
-            "dist_mm": pd.Series(dtype="int64"),
-        })
-        if len(left) == 0 or len(right) == 0:
-            return empty
-        lcx = left["cx"].to_numpy(np.int64)
-        lcy = left["cy"].to_numpy(np.int64)
-        lo_ord = np.lexsort((lcy, lcx))
-        lcx, lcy = lcx[lo_ord], lcy[lo_ord]
-        px = left["px"].to_numpy(np.int64)[lo_ord]
-        py = left["py"].to_numpy(np.int64)[lo_ord]
-        pks = left["primary_key"].to_numpy(object)[lo_ord]
-        rcx = right["cx"].to_numpy(np.int64)
-        rcy = right["cy"].to_numpy(np.int64)
-        # cand_id as the innermost sort key: within a cell the segment
-        # list stays ascending by cand_id, so argmin's first-hit rule
-        # breaks d2 ties toward the smallest cand_id (the contract order)
-        ro_ord = np.lexsort((right["cand_id"].to_numpy(np.int64), rcy, rcx))
-        rcx, rcy = rcx[ro_ord], rcy[ro_ord]
-        ax = right["ax"].to_numpy(np.int64)[ro_ord]
-        ay = right["ay"].to_numpy(np.int64)[ro_ord]
-        bx = right["bx"].to_numpy(np.int64)[ro_ord]
-        by = right["by"].to_numpy(np.int64)[ro_ord]
-        cid = right["cand_id"].to_numpy(np.int64)[ro_ord]
-        dx = bx - ax
-        dy = by - ay
-        len2 = dx * dx + dy * dy
-        lb = np.flatnonzero(
-            np.r_[True, (lcx[1:] != lcx[:-1]) | (lcy[1:] != lcy[:-1])]
-        )
-        lb = np.r_[lb, len(lcx)]
-        rb = np.flatnonzero(
-            np.r_[True, (rcx[1:] != rcx[:-1]) | (rcy[1:] != rcy[:-1])]
-        )
-        rb = np.r_[rb, len(rcx)]
-        frames = []
-
-        def cell_block(ls, le, rs, re):
-            # identical per-cell chunked math as the per-cell cogroup ran
-            for s in range(ls, le, 256):
-                e = min(s + 256, le)
-                best_d2 = np.full(e - s, np.inf)
-                best_cid = np.full(e - s, np.int64(1) << 62, dtype=np.int64)
-                for t in range(rs, re, 4096):
-                    u = min(t + 4096, re)
-                    pax = px[s:e, None] - ax[None, t:u]
-                    pay = py[s:e, None] - ay[None, t:u]
-                    pbx = px[s:e, None] - bx[None, t:u]
-                    pby = py[s:e, None] - by[None, t:u]
-                    pa2 = (pax * pax + pay * pay).astype(np.float64)
-                    pb2 = (pbx * pbx + pby * pby).astype(np.float64)
-                    dot = pax * dx[None, t:u] + pay * dy[None, t:u]
-                    l2 = len2[t:u]
-                    with np.errstate(divide="ignore", invalid="ignore"):
-                        interior = np.maximum(
-                            pa2
-                            - dot.astype(np.float64) * dot.astype(np.float64)
-                            / l2.astype(np.float64),
-                            0.0,
-                        )
-                    d2 = np.where(
-                        (l2[None, :] == 0) | (dot <= 0), pa2,
-                        np.where(dot >= l2[None, :], pb2, interior),
-                    )
-                    d2 = np.where(d2 <= r2, d2, np.inf)
-                    j = np.argmin(d2, axis=1)  # first min = lowest cand_id
-                    rows = np.arange(e - s)
-                    cd2 = d2[rows, j]
-                    ccid = cid[t + j]
-                    better = (cd2 < best_d2) | (
-                        (cd2 == best_d2) & (ccid < best_cid)
-                    )
-                    best_d2 = np.where(better, cd2, best_d2)
-                    best_cid = np.where(better, ccid, best_cid)
-                hit = np.isfinite(best_d2)
-                if not hit.any():
-                    continue
-                frames.append(pd.DataFrame({
-                    "primary_key": pks[s:e][hit],
-                    "cand_id": best_cid[hit],
-                    "dist_mm": np.floor(
-                        np.sqrt(best_d2[hit])
-                    ).astype(np.int64),
-                }))
-
-        i = j = 0
-        while i < len(lb) - 1 and j < len(rb) - 1:
-            ci = (lcx[lb[i]], lcy[lb[i]])
-            cj = (rcx[rb[j]], rcy[rb[j]])
-            if ci < cj:
-                i += 1
-            elif cj < ci:
-                j += 1
-            else:
-                cell_block(lb[i], lb[i + 1], rb[j], rb[j + 1])
-                i += 1
-                j += 1
-        return pd.concat(frames, ignore_index=True) if frames else empty
-
-    return (
-        pts.groupBy("bucket")
-        .cogroup(segs.groupBy("bucket"))
-        .applyInPandas(kernel, out_schema)
-    )
-
-
 def map_match(points: DataFrame, segments: DataFrame,
-              radius_m: float = SNAP_RADIUS_M,
-              broadcast_points: bool = True) -> DataFrame:
+              radius_m: float = SNAP_RADIUS_M) -> DataFrame:
     """(primary_key, cand_id, dist_mm): nearest centerline segment within
     radius_m of each point (ties broken by cand_id); unmatched points are
     omitted. segments needs (cand_id, x0, y0, x1, y1) in meters.
 
-    Join-side choice: the POINTS side is the preferred broadcast build —
-    it is the un-exploded side (one row per point vs ~(len/R+3)^2 cell
-    replicas per segment), so the broadcast hash relation is both smaller
-    and cache-resident; letting Catalyst pick the exploded-segments build
-    measured 30.4 s vs 8.5 s at sf0.1 (11.1M candidate pairs, local[16]).
-    When the point relation is too large to broadcast (a ping-stream-scale
-    run), pass broadcast_points=False: the plan degrades to a shuffle
-    equi-join on the cell keys, which is the correct strategy when BOTH
-    sides are huge — the cells pre-partition the work, nothing is
-    replicated beyond the bounded segment cell cover."""
+    Join shape: a point's home cell holds its COMPLETE candidate set (the
+    segment side covers its bbox ± 1 cell at r-sized cells), so the
+    per-point top-1 closes inside one cell of the grid-join kernel. Both
+    sides exchange by cell key only — nothing is broadcast, and nothing is
+    replicated beyond the bounded segment cell cover — and the equi-join's
+    candidate rows (~10^8 at the 10x tier) never materialize. The block
+    computes the exact d2 CASE in chunked numpy, term for term the
+    oracle's: int64 dx/dot/pa2/pb2 products, the interior projection in
+    double, floor(sqrt) for the distance — every comparison bit-identical
+    to seg_dist2_sql. Segments sort by cand_id within a cell, so argmin's
+    first hit breaks d2 ties toward the smallest cand_id."""
     r_mm = int(round(radius_m * 1000))
-    segs = segments.select(
-        "cand_id",
-        F.expr(_mm("x0")).alias("ax"), F.expr(_mm("y0")).alias("ay"),
-        F.expr(_mm("x1")).alias("bx"), F.expr(_mm("y1")).alias("by"),
-    ).select(
-        "cand_id", "ax", "ay", "bx", "by",
-        F.explode(
-            F.expr(
-                f"sequence(least(ax, bx) div {r_mm} - 1,"
-                f" greatest(ax, bx) div {r_mm} + 1)"
-            )
-        ).alias("cx"),
-    ).select(
-        "cand_id", "ax", "ay", "bx", "by", "cx",
-        F.explode(
-            F.expr(
-                f"sequence(least(ay, by) div {r_mm} - 1,"
-                f" greatest(ay, by) div {r_mm} + 1)"
-            )
-        ).alias("cy"),
+    segs = _cell_cover(
+        segments.select(
+            "cand_id",
+            F.expr(_mm("x0")).alias("ax"), F.expr(_mm("y0")).alias("ay"),
+            F.expr(_mm("x1")).alias("bx"), F.expr(_mm("y1")).alias("by"),
+        ),
+        "least(ax, bx)", "greatest(ax, bx)", "least(ay, by)",
+        "greatest(ay, by)", r_mm, pad=1,
     )
-    pts = points.select(
-        "primary_key",
-        F.expr(_mm("x")).alias("px"), F.expr(_mm("y")).alias("py"),
-    ).select(
-        "primary_key", "px", "py",
-        F.expr(f"px div {r_mm}").alias("cx"),
-        F.expr(f"py div {r_mm}").alias("cy"),
+    pts = _home_cell(
+        points.select(
+            "primary_key",
+            F.expr(_mm("x")).alias("px"), F.expr(_mm("y")).alias("py"),
+        ),
+        "px", "py", r_mm,
     )
-    if broadcast_points:
-        # round-6 kernel path: a point's home cell holds its COMPLETE
-        # candidate set (the segment side covers bbox ± 1 cell at r-sized
-        # cells), so the per-point top-1 closes inside one (cx, cy)
-        # cogroup — the equi-join's ~10^8 emitted candidate rows (8.4 s
-        # of the 20.5 s candidate stage at the 10x tier, before any
-        # distance math) never materialize; the quadratic work runs as
-        # chunked numpy with the CASE's exact arithmetic (int64 staging,
-        # double only for the interior projection — bit-identical d2).
-        # Both sides exchange by cell key only, so this is also the
-        # at-scale shape; the shuffle equi-join below remains as the
-        # no-kernel fallback (broadcast_points=False), pinned equal by
-        # the wave-7 brute-force test.
-        return _map_match_cell_kernel(points, pts, segs, r_mm)
-    # The bbox band is IMPLIED by d2 <= r^2 (the segment's closest point q
-    # has |p-q| <= r and q lies inside the segment bbox), so adding it
-    # never changes the result — it is a cheap comparison-only prefilter
-    # the join can evaluate before the piecewise-projection CASE. The CASE
-    # itself is kept OUT of the join condition as staged subterm columns
-    # (the projection.py:215 lesson): inlined into the join condition its
-    # generated Java grows past janino's method limit once combined with
-    # the bbox terms, and the whole stage silently falls back to
-    # interpreted evaluation (measured 8.4 s -> 30.4 s at sf0.1).
-    joined = pts.join(segs, ["cx", "cy"]).filter(
-        F.expr(
-            f"px BETWEEN least(ax, bx) - {r_mm} AND greatest(ax, bx) + {r_mm}"
-            f" AND py BETWEEN least(ay, by) - {r_mm}"
-            f" AND greatest(ay, by) + {r_mm}"
-        )
-    )
-    stage = [
-        ("_mmdx", "(bx - ax)"), ("_mmdy", "(by - ay)"),
-        ("_mmpax", "(px - ax)"), ("_mmpay", "(py - ay)"),
-        ("_mmpbx", "(px - bx)"), ("_mmpby", "(py - by)"),
-        ("_mmlen2", "(_mmdx*_mmdx + _mmdy*_mmdy)"),
-        ("_mmdot", "(_mmpax*_mmdx + _mmpay*_mmdy)"),
-        ("_mmpa2", "(_mmpax*_mmpax + _mmpay*_mmpay)"),
-        ("_mmpb2", "(_mmpbx*_mmpbx + _mmpby*_mmpby)"),
-    ]
-    for name, sql in stage:
-        joined = joined.withColumn(name, F.expr(sql))
-    # branch structure and arithmetic identical to seg_dist2_sql term for
-    # term (the oracle evaluates the inlined form; IEEE ops bit-match)
-    d2 = F.expr(
-        "(CASE WHEN _mmlen2 = 0 THEN CAST(_mmpa2 AS DOUBLE)"
-        " WHEN _mmdot <= 0 THEN CAST(_mmpa2 AS DOUBLE)"
-        " WHEN _mmdot >= _mmlen2 THEN CAST(_mmpb2 AS DOUBLE)"
-        " ELSE greatest(CAST(_mmpa2 AS DOUBLE)"
-        " - CAST(_mmdot AS DOUBLE) * CAST(_mmdot AS DOUBLE)"
-        " / CAST(_mmlen2 AS DOUBLE), CAST(0 AS DOUBLE)) END)"
-    )
-    cand = (
-        joined.withColumn("d2", d2)
-        .drop(*[name for name, _ in stage])
-        .filter(F.col("d2") <= F.lit(float(r_mm) * float(r_mm)))
-    )
-    # top-1 as a struct-min AGGREGATE, not a row_number window: the
-    # candidate relation is ~|points| x (segments per 3x3 cell block) —
-    # a groupBy min partial-aggregates map-side, so only |points| rows
-    # cross the exchange, where a window would sort the full candidate
-    # volume (measured 46.7 s -> window vs aggregate at sf0.1's 60k
-    # segments). struct ordering = (d2 asc, cand_id asc), exactly the
-    # deterministic tie-break.
-    best = cand.groupBy("primary_key").agg(
-        F.min(F.struct("d2", "cand_id")).alias("best")
-    )
-    return best.select(
-        "primary_key",
-        F.col("best.cand_id").alias("cand_id"),
-        F.floor(F.sqrt(F.col("best.d2"))).cast("bigint").alias("dist_mm"),
+    r2 = float(r_mm) * float(r_mm)
+
+    def block(l, r):
+        import numpy as np
+
+        ax, ay, bx, by, cid = r["ax"], r["ay"], r["bx"], r["by"], r["cand_id"]
+        dx = bx - ax
+        dy = by - ay
+        len2 = dx * dx + dy * dy
+        for s in range(0, len(l["px"]), 256):
+            px = l["px"][s:s + 256, None]
+            py = l["py"][s:s + 256, None]
+            best_d2 = np.full(len(px), np.inf)
+            best_cid = np.full(len(px), np.int64(1) << 62, dtype=np.int64)
+            for t in range(0, len(cid), 4096):
+                u = t + 4096
+                pax = px - ax[None, t:u]
+                pay = py - ay[None, t:u]
+                pbx = px - bx[None, t:u]
+                pby = py - by[None, t:u]
+                pa2 = (pax * pax + pay * pay).astype(np.float64)
+                pb2 = (pbx * pbx + pby * pby).astype(np.float64)
+                dot = pax * dx[None, t:u] + pay * dy[None, t:u]
+                l2 = len2[t:u]
+                with np.errstate(divide="ignore", invalid="ignore"):
+                    interior = np.maximum(
+                        pa2
+                        - dot.astype(np.float64) * dot.astype(np.float64)
+                        / l2.astype(np.float64),
+                        0.0,
+                    )
+                d2 = np.where(
+                    (l2[None, :] == 0) | (dot <= 0), pa2,
+                    np.where(dot >= l2[None, :], pb2, interior),
+                )
+                d2 = np.where(d2 <= r2, d2, np.inf)
+                j = np.argmin(d2, axis=1)  # first min = lowest cand_id
+                rows = np.arange(len(px))
+                cd2 = d2[rows, j]
+                ccid = cid[t + j]
+                better = (cd2 < best_d2) | (
+                    (cd2 == best_d2) & (ccid < best_cid)
+                )
+                best_d2 = np.where(better, cd2, best_d2)
+                best_cid = np.where(better, ccid, best_cid)
+            hit = np.isfinite(best_d2)
+            if hit.any():
+                yield {
+                    "primary_key": l["primary_key"][s:s + 256][hit],
+                    "cand_id": best_cid[hit],
+                    "dist_mm": np.floor(np.sqrt(best_d2[hit])).astype(
+                        np.int64
+                    ),
+                }
+
+    id_type = points.schema["primary_key"].dataType.simpleString()
+    return _cell_merge_join(
+        pts, segs, block,
+        f"primary_key {id_type}, cand_id bigint, dist_mm bigint",
+        right_order=("cand_id",),
     )
 
 
@@ -2665,12 +2474,11 @@ WHERE x >= {qx0!r} AND x <= {qx1!r} AND y >= {qy0!r} AND y <= {qy1!r}"""
 # the half-open vertex rule ((yi > py) != (yj > py)) with the
 # x-intersection comparison CROSS-MULTIPLIED into exact int64 — no
 # division, no float, so both engines agree bit-for-bit. Scale shape: the
-# region relation is grid-bounded (<= 4^res rows, broadcast); points meet
-# regions through a bounded bbox-cover cell equi-join (regions, the small
-# side, explode their covering cells; points carry one home cell); the
-# crossing count is a zero-shuffle higher-order fold over the vertex
-# arrays. Products stay within int64: point-vertex deltas are bbox-local
-# (<= ~8e6 milli), so cross terms are <= ~6e13.
+# grid-join kernel meets points (one home cell each) with regions (their
+# bbox cell cover, each row carrying the ring's vertex arrays), and counts
+# crossings per region in numpy. Products stay within int64: a point
+# meets only rings whose bbox cover holds its cell, so point-vertex deltas
+# stay local (<= ~8e6 milli) and cross terms are <= ~6e13.
 REGION_RES = 4  # 16x16 region cells over the bbox (~4.4 x 4.4 km each)
 REGION_RADIUS_SCALE = 1000  # star radii 0.5..2.0 km
 
@@ -2710,147 +2518,62 @@ def pip_raycast(points: DataFrame, regions: DataFrame,
     ray casting. points carry meter doubles (x, y); regions carry milli
     vertex arrays (xs, ys).
 
-    Both inputs persist for the call: points is typically the geocode
-    pipeline's output and feeds the candidate side AND (via
-    synthetic_regions) the region sizing count + pack collect — without
-    the persist each of those actions re-ran the whole upstream pipeline
-    (measured 4 runs ≈ +8 s at the 10x tier)."""
+    points persists for the call: it is typically the geocode pipeline's
+    output and feeds the point side AND (via synthetic_regions) the region
+    side — without the persist each side re-ran the whole upstream
+    pipeline."""
     from ..caching import persist_tracked
 
     points = persist_tracked(points)
-    regions = persist_tracked(regions)
-    c = int(cell_mm)
-    regs = regions.select(
-        "gid", "xs", "ys",
-        F.expr("array_min(xs)").alias("bx0"),
-        F.expr("array_max(xs)").alias("bx1"),
-        F.expr("array_min(ys)").alias("by0"),
-        F.expr("array_max(ys)").alias("by1"),
-    ).select(
-        "gid", "xs", "ys", "bx0", "bx1", "by0", "by1",
-        F.explode(
-            F.expr(f"sequence(bx0 div {c}, bx1 div {c})")
-        ).alias("cx"),
-    ).select(
-        "*",
-        F.explode(
-            F.expr(f"sequence(by0 div {c}, by1 div {c})")
-        ).alias("cy"),
+    regs = _cell_cover(
+        regions.select("gid", "xs", "ys"),
+        "array_min(xs)", "array_max(xs)", "array_min(ys)", "array_max(ys)",
+        cell_mm,
     )
-    pts = points.select(
-        "primary_key",
-        F.expr(_mm("x")).alias("px"), F.expr(_mm("y")).alias("py"),
-    ).select(
-        "primary_key", "px", "py",
-        F.expr(f"px div {c}").alias("cx"),
-        F.expr(f"py div {c}").alias("cy"),
-    )
-    cand = pts.join(F.broadcast(regs), ["cx", "cy"]).filter(
-        (F.col("px") >= F.col("bx0")) & (F.col("px") <= F.col("bx1"))
-        & (F.col("py") >= F.col("by0")) & (F.col("py") <= F.col("by1"))
+    pts = _home_cell(
+        points.select(
+            "primary_key",
+            F.expr(_mm("x")).alias("px"), F.expr(_mm("y")).alias("py"),
+        ),
+        "px", "py", cell_mm,
     )
 
-    # round-6: the region table is metadata-scale (one ring per occupied
-    # res-cell), so the even-odd count runs as a numpy kernel against a
-    # broadcast (gid -> vertex arrays) pack instead of the interpreted
-    # per-edge HOF aggregate (8 element_at calls per edge per candidate —
-    # the measured cost at the 10x tier). Same exact int64 comparisons,
-    # candidates carry 3 scalar columns across the boundary. Falls back
-    # to the HOF fold when the region table exceeds the pack budget.
-    import os as _os
-
-    n_regs = regions.count()  # metadata-scale sizing action
-    if n_regs <= int(_os.environ.get("SPARK_GRAFT_REGION_PACK_ROWS",
-                                     "1000000")):
+    def block(l, r):
         import numpy as np
-        import pandas as pd
 
-        rpdf = regions.select("gid", "xs", "ys").limit(n_regs + 1).toPandas()
-        if len(rpdf) > n_regs:
-            raise AssertionError(
-                f"region table grew past its counted size {n_regs}"
+        # every ring of the cell as one flat edge list i -> i+1 (wrapping);
+        # ring k's edges start at starts[k]
+        xs = [np.asarray(v, dtype=np.int64) for v in r["xs"]]
+        ys = [np.asarray(v, dtype=np.int64) for v in r["ys"]]
+        starts = np.cumsum([0] + [len(v) for v in xs[:-1]])
+        xi, yi = np.concatenate(xs), np.concatenate(ys)
+        xe = np.concatenate([np.roll(v, -1) for v in xs])
+        ye = np.concatenate([np.roll(v, -1) for v in ys])
+        for s in range(0, len(l["px"]), 4096):
+            px = l["px"][s:s + 4096, None]
+            py = l["py"][s:s + 4096, None]
+            # even-odd count: an edge crosses iff it spans py's horizontal
+            # line (half-open) AND the ray to +x passes left of the
+            # intersection — cross-multiplied, sign-corrected by the edge's
+            # y direction. A point outside a ring's bbox counts an even
+            # number of its edges, so no bbox prefilter is needed.
+            spans = (yi > py) != (ye > py)
+            lhs = (px - xi) * (ye - yi)
+            rhs = (py - yi) * (xe - xi)
+            cross = np.add.reduceat(
+                spans & np.where(ye > yi, lhs < rhs, lhs > rhs), starts,
+                axis=1, dtype=np.int64,
             )
-        pack = {
-            row["gid"]: (
-                np.asarray(row["xs"], dtype=np.int64),
-                np.asarray(row["ys"], dtype=np.int64),
-            )
-            for _, row in rpdf.iterrows()
-        }
-        bc = points.sparkSession.sparkContext.broadcast(pack)
-        id_type = points.schema["primary_key"].dataType.simpleString()
-        gid_type = regions.schema["gid"].dataType.simpleString()
+            ii, kk = np.nonzero(cross % 2 == 1)
+            yield {
+                "primary_key": l["primary_key"][s:s + 4096][ii],
+                "gid": r["gid"][kk],
+            }
 
-        def kernel(batches):
-            import numpy as np
-            import pandas as pd
-
-            rp = bc.value
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                out_pk, out_gid = [], []
-                for gid, grp in pdf.groupby("gid", sort=False):
-                    xs, ys = rp[gid]
-                    xj = np.roll(xs, -1)
-                    yj = np.roll(ys, -1)
-                    px = grp["px"].to_numpy(np.int64)
-                    py = grp["py"].to_numpy(np.int64)
-                    cross = np.zeros(len(px), dtype=np.int64)
-                    for e_i in range(len(xs)):
-                        xi, yi = xs[e_i], ys[e_i]
-                        xe, ye = xj[e_i], yj[e_i]
-                        spans = (yi > py) != (ye > py)
-                        lhs = (px - xi) * (ye - yi)
-                        rhs = (py - yi) * (xe - xi)
-                        inc = np.where(ye > yi, lhs < rhs, lhs > rhs)
-                        cross += spans & inc
-                    keep = (cross % 2) == 1
-                    if keep.any():
-                        out_pk.append(
-                            grp["primary_key"].to_numpy(object)[keep]
-                        )
-                        out_gid.append(np.repeat(gid, int(keep.sum())))
-                if out_pk:
-                    yield pd.DataFrame({
-                        "primary_key": np.concatenate(out_pk),
-                        "gid": np.concatenate(out_gid),
-                    })
-
-        return cand.select("primary_key", "px", "py", "gid").mapInPandas(
-            kernel, f"primary_key {id_type}, gid {gid_type}"
-        )
-
-    # even-odd fold: for edge i -> j (wrap), a crossing iff the edge spans
-    # py's horizontal line (half-open) AND the ray to +x passes left of
-    # the intersection — cross-multiplied, sign-corrected by the edge's
-    # y direction.
-    crossings = F.expr(
-        "aggregate(sequence(1, size(xs)), 0L, (acc, i) -> acc + ("
-        " CASE WHEN ((element_at(ys, i) > py)"
-        "        != (element_at(ys, i % size(xs) + 1) > py))"
-        "      AND ("
-        "        CASE WHEN element_at(ys, i % size(xs) + 1)"
-        "                  > element_at(ys, i)"
-        "        THEN (px - element_at(xs, i))"
-        "             * (element_at(ys, i % size(xs) + 1)"
-        "                - element_at(ys, i))"
-        "             < (py - element_at(ys, i))"
-        "             * (element_at(xs, i % size(xs) + 1)"
-        "                - element_at(xs, i))"
-        "        ELSE (px - element_at(xs, i))"
-        "             * (element_at(ys, i % size(xs) + 1)"
-        "                - element_at(ys, i))"
-        "             > (py - element_at(ys, i))"
-        "             * (element_at(xs, i % size(xs) + 1)"
-        "                - element_at(xs, i))"
-        "        END)"
-        " THEN 1 ELSE 0 END))"
-    )
-    return (
-        cand.withColumn("_cr", crossings)
-        .filter(F.col("_cr") % 2 == 1)
-        .select("primary_key", "gid")
+    id_type = points.schema["primary_key"].dataType.simpleString()
+    gid_type = regions.schema["gid"].dataType.simpleString()
+    return _cell_merge_join(
+        pts, regs, block, f"primary_key {id_type}, gid {gid_type}"
     )
 
 
@@ -2924,25 +2647,13 @@ def segment_crossings(segments: DataFrame,
     """(cand_a, cand_b): unordered pairs (cand_a < cand_b) of properly
     crossing segments. segments carries (cand_id, x0, y0, x1, y1) in
     meters."""
-    c = int(cell_mm)
     s = segments.select(
         "cand_id",
         F.expr(_mm("x0")).alias("ax"), F.expr(_mm("y0")).alias("ay"),
         F.expr(_mm("x1")).alias("bx"), F.expr(_mm("y1")).alias("by"),
     )
-    covered = s.select(
-        "*",
-        F.explode(
-            F.expr(f"sequence(least(ax, bx) div {c},"
-                   f" greatest(ax, bx) div {c})")
-        ).alias("cx"),
-    ).select(
-        "*",
-        F.explode(
-            F.expr(f"sequence(least(ay, by) div {c},"
-                   f" greatest(ay, by) div {c})")
-        ).alias("cy"),
-    )
+    covered = _cell_cover(s, "least(ax, bx)", "greatest(ax, bx)",
+                          "least(ay, by)", "greatest(ay, by)", cell_mm)
     left = covered.select(
         F.col("cand_id").alias("cand_a"), F.col("ax").alias("ax1"),
         F.col("ay").alias("ay1"), F.col("bx").alias("bx1"),

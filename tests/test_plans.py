@@ -72,16 +72,20 @@ def test_geocode_pages_no_sort_merge_join(spark, fixtures_dir):
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
     # probe side shuffle-free: the only hash exchange builds the locator
-    # pack, which lives under the broadcast's InMemoryTableScan (the
-    # session-memoized persisted relation). Once that cache is
+    # pack, which lives under the BroadcastExchange's InMemoryTableScan
+    # (the session-memoized persisted relation). Once that cache is
     # materialized by an earlier geocode run, InMemoryRelation's string
     # rendering repeats the cached build plan (both the substituted
     # fragment and the original), so a raw count over the whole string
     # double-counts an exchange that executes zero times — guard the
-    # probe side (everything above the cached pack) instead.
-    probe_side = plan.split("InMemoryTableScan")[0]
+    # probe side instead: the join's BuildRight build renders after its
+    # probe subtree, so everything before the BroadcastExchange is the
+    # probe side, and it must reach down to the pages scan (a truncated
+    # prefix would guard nothing).
+    probe_side, build_side = plan.split("BroadcastExchange", 1)
+    assert "pages.parquet" in probe_side
     assert _n_exchanges(probe_side) == 0
-    assert "InMemoryTableScan" in plan  # the pack is the cached relation
+    assert "InMemoryTableScan" in build_side  # the pack is the cached relation
 
 
 def test_no_row_at_a_time_python_udf_anywhere(spark):

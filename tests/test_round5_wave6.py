@@ -8,6 +8,7 @@ formula bug in engine+twin cannot hide here.
 
 import datetime
 import math
+import random
 
 from pyspark.sql import functions as F
 
@@ -79,6 +80,33 @@ def test_radius_join_matches_bruteforce(spark):
                 want[key] = d2
     assert got == want
     assert len(want) > 50  # effect size: the scatter genuinely pairs up
+
+    # wide scatter: 400 points over 25 km, so the grid kernel's cells far
+    # outnumber its cogroup buckets and many cells share one bucket's
+    # merge walk
+    rng = random.Random(6)
+    pts = [
+        (f"w{i:03d}", 380000.0 + rng.uniform(0, 25000),
+         4400000.0 + rng.uniform(0, 25000))
+        for i in range(400)
+    ]
+    n_buckets = max(4 * spark.sparkContext.defaultParallelism, 16)
+    cells = {(round(x * 1000) // 500_000, round(y * 1000) // 500_000)
+             for _, x, y in pts}
+    assert len(cells) >= 4 * n_buckets
+    df = spark.createDataFrame(pts, ["primary_key", "x", "y"])
+    out = radius_join(df, radius_m=500.0).collect()
+    got = {(r.pk_a, r.pk_b): r.dist_sq_mm2 for r in out}
+    assert len(got) == len(out), "pair emitted more than once"
+    quant = [(pk, round(x * 1000), round(y * 1000)) for pk, x, y in pts]
+    want = {}
+    for i, (pa, xa, ya) in enumerate(quant):
+        for pb, xb, yb in quant[i + 1:]:
+            d2 = (xa - xb) ** 2 + (ya - yb) ** 2
+            if d2 <= r2:
+                want[(pa, pb)] = d2
+    assert got == want
+    assert len(want) > 50
 
 
 # --------------------------------------------------------- trip segments

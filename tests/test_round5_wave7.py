@@ -3,6 +3,7 @@ Zipf rank-frequency slope — validated against in-python brute force
 (independent of the DuckDB twins the driver gate uses)."""
 
 import math
+import random
 
 from pyspark.sql import functions as F
 
@@ -42,6 +43,41 @@ def test_map_match_matches_bruteforce(spark):
         for r in map_match(pdf, sdf, radius_m=1000.0).collect()
     }
     r2 = (1000 * 1000) ** 2
+    want = _bruteforce_snap(pts, segs, r2)
+    assert "d" not in want and "d" not in got  # beyond-radius point omitted
+    assert got == want
+    assert set(got) == {"a", "b", "c"}
+
+    # wide scatter: 400 points and 300 segments over 25 km, so the grid
+    # kernel's cells far outnumber its cogroup buckets and many cells share
+    # one bucket's merge walk
+    rng = random.Random(7)
+    pts = [
+        (f"w{i:03d}", 380000.0 + rng.uniform(0, 25000),
+         4400000.0 + rng.uniform(0, 25000))
+        for i in range(400)
+    ]
+    segs = []
+    for cid in range(300):
+        x0 = 380000.0 + rng.uniform(0, 25000)
+        y0 = 4400000.0 + rng.uniform(0, 25000)
+        segs.append((cid, x0, y0, x0 + rng.uniform(-1500, 1500),
+                     y0 + rng.uniform(-1500, 1500)))
+    n_buckets = max(4 * spark.sparkContext.defaultParallelism, 16)
+    cells = {(round(x * 1000) // 1_000_000, round(y * 1000) // 1_000_000)
+             for _, x, y in pts}
+    assert len(cells) >= 4 * n_buckets
+    pdf = spark.createDataFrame(pts, ["primary_key", "x", "y"])
+    sdf = spark.createDataFrame(segs, ["cand_id", "x0", "y0", "x1", "y1"])
+    got = {
+        r.primary_key: (r.cand_id, r.dist_mm)
+        for r in map_match(pdf, sdf, radius_m=1000.0).collect()
+    }
+    assert got == _bruteforce_snap(pts, segs, r2)
+    assert 100 < len(got) < len(pts)  # effect size: matches and misses
+
+
+def _bruteforce_snap(pts, segs, r2):
     want = {}
     for pk, x, y in pts:
         px, py = round(x * 1000), round(y * 1000)
@@ -53,19 +89,7 @@ def test_map_match_matches_bruteforce(spark):
                 best = (d2, cid)
         if best is not None:
             want[pk] = (best[1], math.floor(math.sqrt(best[0])))
-    assert "d" not in want and "d" not in got  # beyond-radius point omitted
-    assert got == want
-    assert set(got) == {"a", "b", "c"}
-
-    # the at-scale path (shuffle equi-join on cell keys, nothing broadcast)
-    # must produce identical rows — same candidates, same tie-break
-    got_shuffle = {
-        r.primary_key: (r.cand_id, r.dist_mm)
-        for r in map_match(
-            pdf, sdf, radius_m=1000.0, broadcast_points=False
-        ).collect()
-    }
-    assert got_shuffle == want
+    return want
 
 
 # -------------------------------------------------------------- OD matrix

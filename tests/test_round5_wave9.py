@@ -2,6 +2,8 @@
 asymmetric containment pairs — validated against in-python brute force /
 hand-constructed geometry."""
 
+import random
+
 from pyspark.sql import functions as F
 
 
@@ -58,6 +60,7 @@ def test_pip_raycast_concave_ring(spark):
 def test_pip_raycast_star_regions_nonvacuous(spark, sf_dir):
     import __spark_entry__ as entrymod
     from geocode_spark.operators.spatial import (
+        PIP_CELL_MM,
         pip_raycast,
         synthetic_regions,
     )
@@ -70,6 +73,34 @@ def test_pip_raycast_star_regions_nonvacuous(spark, sf_dir):
     # sanity: strictly fewer than the bbox-candidate count (the star is
     # concave, so some bbox points must fall outside the ring)
     assert n_in < pts.count()
+
+    # wide scatter: 400 points over 25 km against their multi-region star
+    # corpus, checked pair for pair against the brute-force ray cast; the
+    # grid kernel's cells far outnumber its cogroup buckets, so many cells
+    # share one bucket's merge walk
+    rng = random.Random(9)
+    pts = [
+        (f"w{i:03d}", 380000.0 + rng.uniform(0, 25000),
+         4400000.0 + rng.uniform(0, 25000))
+        for i in range(400)
+    ]
+    n_buckets = max(4 * spark.sparkContext.defaultParallelism, 16)
+    cells = {(round(x * 1000) // PIP_CELL_MM, round(y * 1000) // PIP_CELL_MM)
+             for _, x, y in pts}
+    assert len(cells) >= 4 * n_buckets
+    pdf = spark.createDataFrame(pts, ["primary_key", "x", "y"])
+    regions = synthetic_regions(pdf)
+    rings = {
+        r.gid: list(zip(r.xs, r.ys)) for r in regions.collect()
+    }
+    got = {(r.primary_key, r.gid)
+           for r in pip_raycast(pdf, regions).collect()}
+    want = {
+        (pk, gid) for pk, x, y in pts for gid, ring in rings.items()
+        if _raycast(round(x * 1000), round(y * 1000), ring)
+    }
+    assert got == want
+    assert len(rings) > 10 and len(want) > 20  # effect size
 
 
 # ------------------------------------------------------ segment crossings
